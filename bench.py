@@ -181,7 +181,13 @@ def _host_fingerprint() -> dict:
     except OSError:
         fp["cpu_governor"] = None
     fp["cpus"] = os.cpu_count()
-    # ~1-2 s fixed integer workload; best-of-3 to shed one-off stalls
+    fp["calib_spin_sec"] = calib_spin()
+    return fp
+
+
+def calib_spin() -> float:
+    """Seconds for a ~1-2 s fixed single-threaded integer workload,
+    best-of-3 to shed one-off stalls."""
     best = float("inf")
     for _ in range(3):
         t0 = time.perf_counter()
@@ -189,8 +195,7 @@ def _host_fingerprint() -> dict:
         for i in range(2_000_000):
             acc = (acc * 1103515245 + i) & 0xFFFFFFFF
         best = min(best, time.perf_counter() - t0)
-    fp["calib_spin_sec"] = round(best, 4)
-    return fp
+    return round(best, 4)
 
 
 def _read_loadavg() -> float | None:

@@ -15,29 +15,20 @@ from pyspark.sql import functions as F
 _SCALE = float(1 << 62)
 
 
-def _plane_component(j: int, d: Column, portable: bool = False) -> Column:
-    """Deterministic pseudo-random value in [-1, 1) for plane j, dim d.
-
-    ``portable=True`` derives the component from md5 (60 bits / 2^59
-    - 1) instead of xxhash64 — the same value DuckDB computes from
-    ``CAST('0x' || substr(md5(j || '_' || d), 1, 15) AS BIGINT)``, so
-    the oracle-checked driver query reproduces every plane. int64 ->
-    double conversion is IEEE round-to-nearest in both engines, then
-    the /2^59 and -1 are exact, so components are bit-identical."""
-    if portable:
-        key = F.concat_ws("_", F.lit(str(j)), d.cast("string"))
-        raw = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint")
-        return raw / F.lit(float(1 << 59)) - F.lit(1.0)
+def _plane_component(j: int, d: Column) -> Column:
+    """Deterministic pseudo-random value in [-1, 1) for plane j, dim d."""
     return F.xxhash64(F.lit(j), d) / F.lit(_SCALE)
 
 
 def _portable_plane(j: int, dim: int) -> list[float]:
-    """Plane j's components precomputed driver-side. hashlib.md5 yields
-    the same hex as Spark/DuckDB md5, int/2^59 - 1 the same double
-    (scaling by a power of two commutes with rounding), so these
-    literals are bit-identical to the in-plan expression — they just
-    skip recomputing a constant md5 per ROW x plane x dim (measured
-    ~2x on sim_ann at sf0.1)."""
+    """Plane j's md5-derived components, precomputed driver-side: the
+    same value DuckDB computes from ``CAST('0x' || substr(md5(j || '_'
+    || d), 1, 15) AS BIGINT) / 2^59 - 1``, so the oracle-checked driver
+    query reproduces every plane. hashlib.md5 yields the same hex as
+    DuckDB md5, and int -> double is IEEE round-to-nearest in both
+    (scaling by a power of two commutes with rounding), so the baked
+    literals are bit-identical — and skip a constant md5 per ROW x
+    plane x dim (measured ~2x on sim_ann at sf0.1)."""
     import hashlib
 
     return [
@@ -53,25 +44,25 @@ def _signature(
 ) -> Column:
     """Bit i = sign of <vec, plane_i>; 0..2^n_planes-1 as bigint.
 
-    The baked-literal portable path assembles ONE parsed SQL
-    expression for the whole signature: the Column-object form spent
-    ~1s of driver time on py4j round-trips (n_planes x dim F.lit
-    calls alone) before anything ran. repr() literals with the D
-    suffix round-trip to the identical doubles, so signatures are
-    bit-identical to the old form. That path reads the ``embedding``
-    column by name (its only call site); the generic-Column ``vec``
-    parameter serves the non-portable branch."""
-    if portable and dim is not None:
+    The portable path (md5 planes baked in for ``dim`` dimensions)
+    assembles ONE parsed SQL expression for the whole signature: the
+    Column-object form spent ~1s of driver time on py4j round-trips
+    (n_planes x dim F.lit calls alone) before anything ran. repr()
+    literals with the D suffix round-trip to the identical doubles.
+    That path reads the ``embedding`` column by name (its only call
+    site); the generic-Column ``vec`` parameter serves the xxhash64
+    branch."""
+    if portable:
         terms = []
         for j in range(n_planes):
             arr = ", ".join(f"{w!r}D" for w in _portable_plane(j, dim))
-            dot = (
+            fold = (
                 f"round(aggregate(zip_with(array({arr}), embedding,"
                 " (w, x) -> CAST(x AS DOUBLE) * w), 0.0D,"
                 " (acc, v) -> acc + v), 6)"
             )
             terms.append(
-                f"(shiftleft(CASE WHEN {dot} >= 0 THEN 1L ELSE 0L END, {j}))"
+                f"(shiftleft(CASE WHEN {fold} >= 0 THEN 1L ELSE 0L END, {j}))"
             )
         # the 6-dp round before the sign test matches the score-column
         # policy: Spark folds in array order while SQL SUM order is
@@ -80,32 +71,35 @@ def _signature(
         return F.expr(" | ".join(terms))
     sig = None
     for j in range(n_planes):
-        if portable and dim is not None:
-            plane = F.array(*[F.lit(w) for w in _portable_plane(j, dim)])
-            prods = F.zip_with(plane, vec, lambda w, x: x.cast("double") * w)
-        else:
-            prods = F.zip_with(
-                vec,
-                F.sequence(F.lit(0), F.size(vec) - 1),
-                lambda x, d: x.cast("double") * _plane_component(j, d, portable),
-            )
+        prods = F.zip_with(
+            vec,
+            F.sequence(F.lit(0), F.size(vec) - 1),
+            lambda x, d: x.cast("double") * _plane_component(j, d),
+        )
         dot_j = F.aggregate(
             prods,
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
-        if portable:
-            # round to the same 6-dp grain as the score columns BEFORE
-            # the sign test: Spark folds in array order while SQL SUM
-            # order is unspecified, so an unrounded dot within an ulp
-            # of zero could flip a signature bit across engines
-            dot_j = F.round(dot_j, 6)
         bit = F.when(dot_j >= 0, F.lit(1).cast("bigint")).otherwise(
             F.lit(0).cast("bigint")
         )
         term = F.shiftleft(bit, j)
         sig = term if sig is None else sig.bitwiseOR(term)
     return sig
+
+
+def dot(a: str | Column, b: str | Column) -> Column:
+    """Double-precision left-fold dot product of two array columns."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def norm(a: str | Column) -> Column:
+    return F.sqrt(dot(a, a))
 
 
 def lsh_topk(
@@ -123,9 +117,11 @@ def lsh_topk(
     signature -> hamming filter prunes the corpus -> exact cosine on
     survivors -> global top-k. No shuffle of the corpus at any point.
     ``portable=True`` switches the plane hash to the md5-derived,
-    SQL-reproducible family (the oracle path); pass ``dim`` with it to
-    bake the planes in as literals (no per-row md5).
+    SQL-reproducible family (the oracle path), baked in as literals for
+    the ``dim``-wide embeddings it requires.
     """
+    if portable and dim is None:
+        raise ValueError("lsh_topk(portable=True) needs the embedding dim")
     # NOT spread (round-15 re-adjudication): round 14 added
     # catalog.spread before the signature projection; the driver's
     # PERF_r14 regressed sim_ann 0.81x and a clean interleaved toggle
@@ -148,22 +144,12 @@ def lsh_topk(
         .withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
     )
-    dot = F.aggregate(
-        F.zip_with("embedding", "qv", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.zip_with(c, c, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
     scored = cand.select(
         "vec_id",
         "hamming",
-        F.round(dot / (norm("embedding") * norm("qv")), 6).alias("score"),
+        F.round(dot("embedding", "qv") / (norm("embedding") * norm("qv")), 6).alias(
+            "score"
+        ),
     )
     # TakeOrderedAndProject, not a global window (see sim_topk)
     return (
@@ -171,19 +157,6 @@ def lsh_topk(
         .limit(k)
         .select("vec_id", "score", "hamming")
     )
-
-
-def _dotd(a, b) -> Column:
-    """Double-precision left-fold dot product of two array columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _normd(a) -> Column:
-    return F.sqrt(_dotd(a, a))
 
 
 def ivf_topk(
@@ -233,7 +206,7 @@ def ivf_topk(
             # the 6-dp grain absorbs the ulp spread so the probed cell
             # set is deterministic (same policy as the score columns)
             F.round(
-                _dotd("centroid", "qv") / (_normd("centroid") * _normd("qv")), 6
+                dot("centroid", "qv") / (norm("centroid") * norm("qv")), 6
             ).alias("csim"),
         )
         .orderBy(F.col("csim").desc(), "label")
@@ -248,7 +221,7 @@ def ivf_topk(
     scored = cand.select(
         "vec_id",
         "label",
-        F.round(_dotd("embedding", "qv") / (_normd("embedding") * _normd("qv")), 6).alias(
+        F.round(dot("embedding", "qv") / (norm("embedding") * norm("qv")), 6).alias(
             "score"
         ),
     )

@@ -645,6 +645,8 @@ def media_features(
         unknown = set(columns) - set(_FEATURE_COL_TYPES)
         if unknown:
             raise ValueError(f"unknown feature columns: {sorted(unknown)}")
+        if not columns:
+            raise ValueError("columns must name at least one feature column")
         # canonical order, so the schema is stable however the caller
         # spells the subset
         keep = tuple(c for c in _FEATURE_COL_TYPES if c in set(columns))

@@ -10,8 +10,6 @@ buckets so the candidate set stays bounded under skew.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -196,6 +194,8 @@ def jaccard_pairs(
     SLOWER — the nested transform/slice expression costs more than
     the sort-merge join it removes.
     """
+    from hortacloud_importer_spark.operators.minhash import drop_hot_buckets
+
     # xxhash64 the shingle before the self-join: the join/distinct keys
     # become 8-byte longs instead of ~20-char strings, so the 2.8M-row
     # pair shuffle moves a fraction of the bytes (collision odds at this
@@ -218,9 +218,6 @@ def jaccard_pairs(
         .localCheckpoint()
     )
     if df_cap is not None:
-        # hot-shingle side is tiny by construction (only df>cap
-        # survivors) -> broadcast anti-join, no extra shuffle of the
-        # posting lists.
         # Measured alternative: count(*) OVER (PARTITION BY shingle)
         # then filter is ~25% faster at sf0.1 (the window reuses the
         # shingle exchange the join needs) but scale-UNSAFE: windows
@@ -228,13 +225,7 @@ def jaccard_pairs(
         # list lands on one window task before the filter — the exact
         # straggler the cap exists to prevent. The aggregate keeps
         # map-side partials, so hot keys collapse before the shuffle.
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > df_cap)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
+        sh = drop_hot_buckets(sh, ["shingle"], df_cap)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -257,7 +248,7 @@ def jaccard_pairs(
     )
 
 
-# Production bucket caps (see operators/minhash.py::_drop_hot_buckets
+# Production bucket caps (see operators/minhash.py::drop_hot_buckets
 # and the SOAK.md corpus section for the adversarial blowup that
 # motivated them). Shared with the DuckDB oracle mirrors below so the
 # cap path itself is oracle-checked, not just the classic-LSH path
@@ -1115,91 +1106,6 @@ def substring_find(corpus: DataFrame, L: int = _SUBSTR_L) -> DataFrame:
     return _substring_spans(corpus, dup, L)
 
 
-@register("dedup_substring_df", "K1", oracle=_SUBSTR_ORACLE,
-          driver=False)
-def dedup_substring_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stride-1 substring dedup with a DOCUMENT-FREQUENCY PRE-FILTER
-    on the gram fingerprints (round-13 ask #2): byte-identical output
-    to :func:`dedup_substring` — the same oracle pins all three
-    variants — see :func:`substring_find_df`."""
-    return substring_find_df(_dup_corpus(spark, sf_dir))
-
-
-def substring_find_df(corpus: DataFrame, L: int = _SUBSTR_L) -> DataFrame:
-    """Stride-1 substring-dedup FIND with a DF pre-filter: only gram
-    fingerprints seen >= 2 times corpus-wide can seed a span, so the
-    expensive exact-verify stage runs on candidate positions
-    (proportional to DUPLICATED content), not the whole corpus.
-
-    Exactness argument (same family as substring_find_seeded's): pass
-    1 counts an 8-byte xxhash64 of each L-gram; a truly duplicated
-    gram hashes identically at every occurrence, so its seed hash
-    reaches count >= 2 and ALL its positions survive the semi-join —
-    no miss. A hash collision between different grams only ADDS
-    candidates; pass 2 re-verifies candidates with the exact 16-byte
-    md5 digest, and a duplicated gram's full occurrence set is inside
-    the candidate set, so its candidate-subset count equals its
-    corpus-wide count. Collided unique grams count 1 under md5 and
-    drop. Output is therefore bit-identical to the baseline.
-
-    Plan shape (100 TB posture) vs the stride-1 baseline's single
-    ~28 B/char sorted window shuffle:
-    1. seed DF count: the narrowest possible corpus-wide shuffle —
-       8-byte hashes through a map-side-combined HASH aggregate (no
-       doc_id/pos payload, no sort); repeated grams combine before
-       the wire, so dup-heavy corpora shuffle LESS here, not more;
-    2. the duplicated-fingerprint table semi-joins back onto a
-       map-side recompute of the gram stream (md5 computed BEFORE the
-       join and text dropped, so even a shuffle-fallback join never
-       moves document text. On mostly-unique corpora the table is
-       tiny and broadcasts — stage 2 is then map-side free);
-    3. exact verify: the baseline's digest window, but over
-       candidates only.
-    MEASURED AND REJECTED as a scale path (SOAK.md, round 14, both
-    corpus shapes at 500k docs): 1.9x MORE shuffle than stride-1 on
-    the 46%-duplicated corpus (stages 2-3 remove nothing there) and
-    STILL 1.75x more on the fully-unique corpus — the premise that
-    the seed table is "tiny" fails, because it is one row per
-    POSITION and on a unique corpus nothing map-side-combines, so
-    stage 1 exchanges the positional stream it was meant to avoid.
-    The lever that works is reducing positions (the minimizer-seeded
-    variant, 6.5x less shuffle on unique corpora). Kept registered
-    oracle-exact as the recorded experiment, per the ngram_ppx
-    pre-agg rejection discipline."""
-    from pyspark.sql.window import Window
-
-    eligible = corpus.filter(F.length("text") >= L)
-    pos_seq = F.explode(
-        F.sequence(F.lit(1), F.length("text") - L + 1)
-    ).alias("pos")
-    gram = F.expr(f"substring(text, pos, {L})")
-    dup_xh = (
-        eligible.select(pos_seq, "text")
-        .select(F.xxhash64(gram).alias("xh"))
-        .groupBy("xh")
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") > 1)
-        .select("xh")
-    )
-    cand = (
-        eligible.select("doc_id", pos_seq, "text")
-        .select(
-            "doc_id",
-            "pos",
-            F.xxhash64(gram).alias("xh"),
-            F.unhex(F.md5(gram)).alias("h"),
-        )
-        .join(dup_xh, "xh", "left_semi")
-        .select("doc_id", "pos", "h")
-    )
-    dup = (
-        cand.withColumn("c", F.count("*").over(Window.partitionBy("h")))
-        .filter(F.col("c") > 1)
-        .select("doc_id", "pos")
-    )
-    return _substring_spans(corpus, dup, L)
-
-
 def _substring_spans(corpus: DataFrame, dup: DataFrame, L: int) -> DataFrame:
     """Shared tail of the substring-dedup family: duplicated positions
     -> gaps-and-islands span merge -> per-doc (n_spans, dup_chars,
@@ -1851,8 +1757,7 @@ def _pack_prefix_of(spark: SparkSession, d: DataFrame) -> DataFrame:
     ranged = d.repartitionByRange(spark_parts, "doc_id").withColumn(
         "_pid", F.spark_partition_id()
     )
-    if os.environ.get("SPARK_GRAFT_PACK_CKPT", "1") != "0":
-        ranged = ranged.localCheckpoint()
+    ranged = ranged.localCheckpoint()
     counts = ranged.groupBy("_pid").agg(F.sum("n").alias("_t"))
     w_off = Window.orderBy("_pid").rowsBetween(
         Window.unboundedPreceding, -1

@@ -11,24 +11,15 @@ engines can't flip the order (values carry ~1e-15 relative error,
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hortacloud_importer_spark.catalog import spread, table
+from hortacloud_importer_spark.operators.ann import dot, norm
 from hortacloud_importer_spark.registry import register
 
 _QUERY_VEC_ID = 0
 _TOP_K = 10
-
-
-def _dot(a: str | Column, b: str | Column) -> Column:
-    """Deterministic double dot product of two float arrays."""
-    prod = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prod, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm(a: str | Column) -> Column:
-    return F.sqrt(_dot(a, a))
 
 
 # DuckDB mirror: per-dimension products summed per vec (sum order differs
@@ -120,7 +111,7 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # qnorm folds once in the broadcast 1-row side, not once per corpus
     # row (same fold order -> bit-identical score)
     q = e.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
-        F.col("embedding").alias("qv"), _norm("embedding").alias("qnorm")
+        F.col("embedding").alias("qv"), norm("embedding").alias("qnorm")
     )
     scored = (
         e.filter(F.col("vec_id") != _QUERY_VEC_ID)
@@ -128,7 +119,7 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.round(
-                _dot("embedding", "qv") / (_norm("embedding") * F.col("qnorm")), 6
+                dot("embedding", "qv") / (norm("embedding") * F.col("qnorm")), 6
             ).alias("score"),
         )
     )
@@ -215,16 +206,16 @@ def sim_pairs_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("vec_a"),
         F.col("label").alias("lbl"),
         F.col("embedding").alias("emb_a"),
-        _norm("embedding").alias("norm_a"),
+        norm("embedding").alias("norm_a"),
     )
     b = e.select(
         F.col("vec_id").alias("vec_b"),
         F.col("label").alias("lbl"),
         F.col("embedding").alias("emb_b"),
-        _norm("embedding").alias("norm_b"),
+        norm("embedding").alias("norm_b"),
     )
     cos = F.round(
-        _dot("emb_a", "emb_b") / (F.col("norm_a") * F.col("norm_b")), 6
+        dot("emb_a", "emb_b") / (F.col("norm_a") * F.col("norm_b")), 6
     )
     return (
         a.join(b, "lbl")
@@ -287,7 +278,7 @@ def sim_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     file + probe-cell semi-join + exact re-score. Both prune the
     corpus scan to a bounded candidate set — the two standard 100 TB
     ANN shapes. The LSH planes run in portable-hash mode
-    (operators/ann.py::_plane_component, md5-derived — bit-identical
+    (operators/ann.py::_portable_plane, md5-derived — bit-identical
     in DuckDB); IVF centroid similarity is rounded to 6 dp before
     cell ranking so cross-engine float-summation ulps can't change
     the probed set. Recall vs sim_topk stays asserted in tests; the

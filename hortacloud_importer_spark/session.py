@@ -37,8 +37,7 @@ def get_spark(app_name: str = "hortacloud-importer-spark") -> SparkSession:
         # measured 6.9->3.5 s on vol_octree_build, 2.2->1.4 s on
         # vol_pyramid_throughput at sf0.1 (OPTIMIZATION_r14.md).
         .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_CACHED_REPLAN", "true"),
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -346,6 +346,8 @@ def test_features_wanted_columns_pushdown(spark):
         assert r["max_intensity"] == fr[r["media_id"]]["max_intensity"]
     with pytest.raises(ValueError, match="unknown feature columns"):
         media_features(media, columns=("nope",))
+    with pytest.raises(ValueError, match="at least one feature column"):
+        media_features(media, columns=())
 
 
 def test_features_wanted_columns_tag_mode(spark):

@@ -143,6 +143,9 @@ def test_lsh_ann_candidates_score_exact(spark, sf_dir):
         v = vecs[r["vec_id"]]
         want = round(float(v @ q / (np.linalg.norm(v) * np.linalg.norm(q))), 6)
         assert r["score"] == pytest.approx(want, abs=2e-6)
+    # the portable planes are baked in per dimension: no dim, no plan
+    with pytest.raises(ValueError, match="needs the embedding dim"):
+        lsh_topk(emb, query_vec_id=0, portable=True)
 
 
 def test_df_cap_bounds_pairs(spark):
@@ -372,34 +375,43 @@ def test_simhash_budget_matches_duckdb_when_budget_fires(spark):
     assert {(a, b) for a, b, _ in got if a == 0} == {(0, 1), (0, 2)}
 
 
-def test_minhash_pairs_sig_through_toggle_is_equivalent(
-    spark, corpus, monkeypatch
-):
-    """SPARK_GRAFT_MINHASH_SIG_THROUGH flips between the round-14
-    sig-through-band-join shape and the round-15 id-only banding +
-    sig join-back default. est_jaccard is a deterministic function of
-    the pair, so the two shapes must return the SAME row set — this is
-    the equivalence that lets the A/B toggle exist without an oracle
-    re-derivation per side."""
+def _banded_lsh_reference(sigs, n_hashes, bands, cap):
+    """Pure-Python banded LSH over collected signatures: a pair is a
+    candidate when any band tuple is equal, after (band, tuple) groups
+    holding more than ``cap`` docs are dropped; est = fraction of
+    equal hashes."""
+    rows = n_hashes // bands
+    buckets: dict[tuple, list[int]] = {}
+    for doc, sig in sigs.items():
+        for i in range(bands):
+            key = (i, tuple(sig[i * rows:(i + 1) * rows]))
+            buckets.setdefault(key, []).append(doc)
+    cand = set()
+    for docs in buckets.values():
+        if cap is not None and len(docs) > cap:
+            continue
+        cand |= {(a, b) for a in docs for b in docs if a < b}
+    return sorted(
+        (a, b, sum(x == y for x, y in zip(sigs[a], sigs[b])) / n_hashes)
+        for a, b in cand
+    )
 
-    def rows(flag: str):
-        monkeypatch.setenv("SPARK_GRAFT_MINHASH_SIG_THROUGH", flag)
-        return sorted(
-            (r["doc_a"], r["doc_b"], r["est_jaccard"])
-            for r in minhash_pairs(
-                _shingles(corpus), n_hashes=32, bands=8
-            ).collect()
-        )
 
-    assert rows("0") == rows("1")
-    # and with the production bucket cap engaged
-    def rows_capped(flag: str):
-        monkeypatch.setenv("SPARK_GRAFT_MINHASH_SIG_THROUGH", flag)
-        return sorted(
-            (r["doc_a"], r["doc_b"], r["est_jaccard"])
-            for r in minhash_pairs(
-                _shingles(corpus), n_hashes=32, bands=8, bucket_cap=2
-            ).collect()
-        )
-
-    assert rows_capped("0") == rows_capped("1")
+@pytest.mark.parametrize("cap", [None, 2])
+def test_minhash_pairs_matches_python_banded_lsh(spark, corpus, cap):
+    """minhash_pairs (xxhash mode, uncapped and with the production
+    bucket cap engaged) returns exactly the pairs and estimates a
+    pure-Python banded LSH derives from the same signatures."""
+    sigs = {
+        r["doc_id"]: list(r["sig"])
+        for r in minhash_signatures(_shingles(corpus), n_hashes=32).collect()
+    }
+    got = sorted(
+        (r["doc_a"], r["doc_b"], r["est_jaccard"])
+        for r in minhash_pairs(
+            _shingles(corpus), n_hashes=32, bands=8, bucket_cap=cap
+        ).collect()
+    )
+    want = _banded_lsh_reference(sigs, 32, 8, cap)
+    assert got == want
+    assert (0, 1, 1.0) in got  # the exact dup survives either way

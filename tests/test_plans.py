@@ -542,23 +542,6 @@ def test_simhash_budget_adds_no_exchange_at_scale(spark, sf_dir):
     assert "Exchange" not in span, span
 
 
-def test_substring_df_prefilter_plan(spark, sf_dir):
-    """The DF pre-filter variant's contract: the corpus-wide count
-    pass shuffles ONLY the 8-byte xxhash64 seed (a hash aggregate
-    with a partial stage — no doc_id/pos payload, no sort), and no
-    exchange anywhere carries document text (md5 is computed before
-    the semi-join so even a shuffle-fallback join moves digests)."""
-    plan = _plan(spark, "dedup_substring_df", sf_dir)
-    assert "xxhash64" in plan
-    assert "unhex" in plan
-    # the seed DF count must be a partial-aggregated HashAggregate
-    # keyed on xh alone
-    assert "partial_count" in plan
-    for chunk in plan.split("Exchange")[1:]:
-        first_line = chunk.splitlines()[0]
-        assert "text" not in first_line, first_line
-
-
 def test_ingest_increment_exchanges_digests_only(spark, sf_dir):
     """The incremental-ingest contract (corpus_ingest_increment): the
     classification join and the report aggregate move fingerprints and

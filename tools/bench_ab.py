@@ -34,35 +34,10 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench import BAND, REF_CALIB  # single source of truth for the band
+# single source of truth for the band and the host instruments
+from bench import BAND, REF_CALIB, _read_steal_sec, calib_spin
 
 PINNED_R8_REV = "7576aee"  # round-8 HEAD: last rev before the band repin
-
-
-def calib_spin() -> float:
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        acc = 0
-        for i in range(2_000_000):
-            acc = (acc * 1103515245 + i) & 0xFFFFFFFF
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
-
-
-def read_steal_sec() -> float | None:
-    """Cumulative hypervisor steal seconds (see bench._read_steal_sec:
-    steal waves are invisible to both the idle gate and the calib
-    spin, and they are the round-14-measured cause of 2-3x phantom
-    totals on identical code)."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        if parts[0] != "cpu" or len(parts) < 9:
-            return None
-        return float(parts[8]) / os.sysconf("SC_CLK_TCK")
-    except (OSError, ValueError, IndexError):
-        return None
 
 
 # A rep whose run-average steal exceeds this many vCPUs is discarded
@@ -81,7 +56,7 @@ def run_bench(tree: str) -> dict:
     env.setdefault("SPARK_GRAFT_BENCH_MAXLOAD", "0.8")
     env.setdefault("SPARK_GRAFT_BENCH_IDLE_TIMEOUT", "900")
     c = calib_spin()
-    steal0 = read_steal_sec()
+    steal0 = _read_steal_sec()
     t0 = time.time()
     r = subprocess.run(
         [sys.executable, "bench.py"],
@@ -91,7 +66,7 @@ def run_bench(tree: str) -> dict:
         text=True,
         timeout=1800,
     )
-    steal1 = read_steal_sec()
+    steal1 = _read_steal_sec()
     line = next(
         (
             ln

@@ -3,16 +3,16 @@
 
 Same methodology as tools/bench_ab.py (interleaved sides, single-rep
 bench subprocesses, per-query min across reps, calibration spin per
-run) but both sides run the CURRENT tree — the variable is an
-environment toggle (e.g. SPARK_GRAFT_SPREAD=0/1), so a mechanism can
-be attributed without committing a revert first.
+run) but both sides run the CURRENT tree — the variable is a
+deployment setting (e.g. the driver heap, SPARK_GRAFT_DRIVER_MEM=2g
+vs 8g), so it can be attributed without committing a change first.
 
 Usage:
     python tools/exp_env_ab.py '<env_a_json>' '<env_b_json>' <reps> q1 q2 ...
 
 Example:
-    python tools/exp_env_ab.py '{"SPARK_GRAFT_SPREAD":"1"}' \
-        '{"SPARK_GRAFT_SPREAD":"0"}' 3 sim_ann sim_topk
+    python tools/exp_env_ab.py '{"SPARK_GRAFT_DRIVER_MEM":"2g"}' \
+        '{"SPARK_GRAFT_DRIVER_MEM":"8g"}' 3 sim_ann sim_topk
 """
 
 from __future__ import annotations
@@ -21,20 +21,11 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-
-def calib_spin() -> float:
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        acc = 0
-        for i in range(2_000_000):
-            acc = (acc * 1103515245 + i) & 0xFFFFFFFF
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
+from bench import REF_CALIB, calib_spin
 
 
 def run_subset(extra_env: dict, names: list[str]) -> dict:
@@ -103,8 +94,8 @@ def main() -> None:
                 file=sys.stderr,
             )
             for q, t in res["queries"].items():
-                # normalize each run by its calib spin vs the first run's
-                t_n = t * 0.2407 / max(spin, 1e-9)
+                # normalize each run by its calib spin vs the reference
+                t_n = t * REF_CALIB / max(spin, 1e-9)
                 mins[side][q] = min(mins[side].get(q, float("inf")), t_n)
     rows = []
     for q in names:

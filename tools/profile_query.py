@@ -1,26 +1,62 @@
 #!/usr/bin/env python
 """Per-job/stage profile of registry queries (optimization harness).
 
-Runs each named query with the bench trigger, then dumps every Spark
-job/stage it spawned (duration, shuffle bytes, task count) from the
-REST API. Usage:
+Runs each named query with the bench trigger under its own job group,
+then dumps every Spark job/stage it spawned (duration, shuffle bytes,
+task count) from the driver's status store, which Spark keeps even
+with the web UI disabled. Usage:
 
     python tools/profile_query.py <name> [name...]
 
-Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
+Env: SPARK_GRAFT_SF_DIR (default sf0.1), plus the session settings
+session.get_spark reads (SPARK_GRAFT_CPUS, SPARK_GRAFT_DRIVER_MEM, ...).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+
+def _print_jobs(sc, group: str) -> None:
+    # the status store is filled by the listener bus asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    tot_stage_ms = 0
+    for job_id in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        job = store.job(job_id)
+        if job.submissionTime().isDefined() and job.completionTime().isDefined():
+            d = (
+                job.completionTime().get().getTime()
+                - job.submissionTime().get().getTime()
+            ) / 1e3
+            dur = f"{d:7.3f}s"
+        else:
+            dur = "      ?"
+        print(f"  job {job_id:>4} {dur}  tasks={job.numCompletedTasks():>4}")
+        stage_ids = job.stageIds()
+        for i in range(stage_ids.size()):
+            sid = stage_ids.apply(i)
+            s = store.lastStageAttempt(sid)
+            if str(s.status()) != "COMPLETE":
+                continue  # skipped: its shuffle output was reused
+            ms = s.executorRunTime()
+            tot_stage_ms += ms
+            srb = s.shuffleReadBytes() / 1048576
+            swb = s.shuffleWriteBytes() / 1048576
+            inb = s.inputBytes() / 1048576
+            nm = s.name()[:70]
+            print(
+                f"    stage {sid:>4} exec={ms/1000.0:7.3f}s tasks={s.numCompleteTasks():>4}"
+                f" in={inb:8.1f}M sr={srb:8.1f}M sw={swb:8.1f}M  {nm}"
+            )
+    print(
+        f"  total executor run time: {tot_stage_ms/1000.0:.3f}s"
+        f" (x{sc.defaultParallelism} cores)"
+    )
 
 
 def main() -> None:
@@ -29,88 +65,28 @@ def main() -> None:
         raise SystemExit("usage: profile_query.py <query> [query...]")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ["SPARK_GRAFT_CPUS"]
-    spark = (
-        SparkSession.builder.appName("profile-query")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # keep in lockstep with session.get_spark: AQE re-planning of
-        # cached plans' output partitioning (round-14)
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4058")
-        .getOrCreate()
-    )
-    from hortacloud_importer_spark.registry import all_queries
-
     import bench
+    from hortacloud_importer_spark.registry import all_queries
+    from hortacloud_importer_spark.session import get_spark
 
+    spark = get_spark("profile-query")
     specs = all_queries()
     sc = spark.sparkContext
-    base = sc.uiWebUrl
-    app = sc.applicationId
-
-    def rest(path: str):
-        with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/{path}", timeout=30) as fh:
-            return json.loads(fh.read())
 
     # warm JVM + parquet footers
     bench._trigger(specs[names[0]].fn(spark, sf_dir), names[0])
 
     for name in names:
-        jobs_before = {j["jobId"] for j in rest("jobs")}
-        sc.setJobDescription(f"profile:{name}")
+        group = f"profile:{name}"
+        sc.setJobGroup(group, group)
         t0 = time.time()
         bench._trigger(specs[name].fn(spark, sf_dir), name)
         wall = time.time() - t0
-        sc.setJobDescription(None)
-        time.sleep(0.3)
-        jobs = [j for j in rest("jobs") if j["jobId"] not in jobs_before]
-        stages = {s["stageId"]: s for s in rest("stages?status=complete")}
-        print(f"\n=== {name}: wall {wall:.3f}s, {len(jobs)} jobs ===")
-        tot_stage_ms = 0
-        for j in sorted(jobs, key=lambda j: j["jobId"]):
-            sub = j.get("submissionTime", "")
-            comp = j.get("completionTime", "")
-            dur = ""
-            try:
-                from datetime import datetime
-
-                fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-                d = (
-                    datetime.strptime(comp, fmt) - datetime.strptime(sub, fmt)
-                ).total_seconds()
-                dur = f"{d:7.3f}s"
-            except Exception:
-                dur = "      ?"
-            print(f"  job {j['jobId']:>4} {dur}  tasks={j.get('numCompletedTasks', '?'):>4}")
-            for sid in j.get("stageIds", []):
-                s = stages.get(sid)
-                if not s:
-                    continue
-                ms = s.get("executorRunTime", 0)
-                tot_stage_ms += ms
-                srb = s.get("shuffleReadBytes", 0) / 1048576
-                swb = s.get("shuffleWriteBytes", 0) / 1048576
-                inb = s.get("inputBytes", 0) / 1048576
-                nm = s.get("name", "")[:70]
-                print(
-                    f"    stage {sid:>4} exec={ms/1000.0:7.3f}s tasks={s.get('numCompleteTasks', 0):>4}"
-                    f" in={inb:8.1f}M sr={srb:8.1f}M sw={swb:8.1f}M  {nm}"
-                )
-        print(f"  total executor run time: {tot_stage_ms/1000.0:.3f}s (x{int(os.environ['SPARK_GRAFT_CPUS'])} cores)")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        print(f"\n=== {name}: wall {wall:.3f}s, {n_jobs} jobs ===")
+        _print_jobs(sc, group)
 
 
 if __name__ == "__main__":

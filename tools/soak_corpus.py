@@ -87,8 +87,6 @@ QUERIES = [
     # lesson (commit b7fe00e). The checksum aggregate touches every
     # output column of every row, so nothing prunes.
     ("dedup_substring", "stride-1 exactness: ~28 shuffle B per corpus char"),
-    ("dedup_substring_df",
-     "DF pre-filter: 8-byte seed count, exact verify on candidates"),
     ("dedup_substring_seeded", "minimizer seeds: same output, thin shuffles"),
     ("dedup_substring_apply", "span rewrite: text shuffles ONCE by necessity"),
     # r14: incremental ingest against the committed fingerprint store —
@@ -122,7 +120,6 @@ FULL_AGG = {
     "corpus_ingest_increment",
     "q_dataset_build",
     "dedup_substring",
-    "dedup_substring_df",
     "dedup_substring_seeded",
     "dedup_substring_apply",
     "text_ngram_ppx",
@@ -327,8 +324,6 @@ def main() -> int:
         queries = [
             ("substring_find",
              "stride-1 exactness: ~28 shuffle B per corpus char"),
-            ("substring_find_df",
-             "DF pre-filter: 8-byte seed count, exact verify on candidates"),
             ("substring_find_seeded",
              "minimizer seeds: same output, thin shuffles"),
         ]
@@ -422,7 +417,6 @@ def main() -> int:
     from hortacloud_importer_spark.catalog import table
     from hortacloud_importer_spark.queries.dedup import (
         substring_find,
-        substring_find_df,
         substring_find_seeded,
     )
 
@@ -437,7 +431,6 @@ def main() -> int:
 
     extra_fns = {
         "substring_find": _raw_corpus_fn(substring_find),
-        "substring_find_df": _raw_corpus_fn(substring_find_df),
         "substring_find_seeded": _raw_corpus_fn(substring_find_seeded),
     }
 
@@ -697,7 +690,7 @@ def _write_md(r: dict) -> None:
         "iid-zipf, making every document's token DISTRIBUTION nearly "
         "identical — the uncapped simhash prefix join emitted 3.7e9 "
         "genuine-under-the-metric pairs. Fix: `bucket_cap` on both LSH "
-        "joins (operators/minhash.py::_drop_hot_buckets — the LSH "
+        "joins (operators/minhash.py::drop_hot_buckets — the LSH "
         "analog of the n-gram DF cap), defaulted on the production "
         "variants; the oracle-mode query keeps classic semantics. The "
         "capped MinHash row above recovers the planted pair structure "
@@ -772,26 +765,6 @@ def _write_md_substring(r: dict) -> None:
             "by construction) the two converge — see the "
             "dedup_substring rows in the CORPUS SOAK section for that "
             "honest bound.",
-        ]
-    if "substring_find" in by_q and "substring_find_df" in by_q:
-        base = by_q["substring_find"]
-        dfp = by_q["substring_find_df"]
-        tot_b = base["shuf_write_mb"] + base["shuf_read_mb"]
-        tot_d = dfp["shuf_write_mb"] + dfp["shuf_read_mb"]
-        ratio = round(tot_b / max(tot_d, 0.1), 1)
-        wr = round(base["wall_sec"] / max(dfp["wall_sec"], 0.1), 1)
-        lines += [
-            "",
-            f"**DF pre-filter (round-14 ask #2): {tot_b:,.0f} MiB "
-            f"stride-1 vs {tot_d:,.0f} MiB DF-filtered — {ratio}x** "
-            f"(wall {base['wall_sec']}s vs {dfp['wall_sec']}s, "
-            f"{wr}x). The corpus-wide pass shrinks to an 8-byte "
-            "hash-aggregated seed count (no sort, no doc/pos "
-            "payload); the exact md5 verify then runs on candidate "
-            "positions only. Same degradation mode as seeding: as the "
-            "duplicated fraction grows, candidates approach all "
-            "positions — the dedup_substring_df row in the CORPUS "
-            "SOAK section bounds that end.",
         ]
     lines.append("")
     _splice_md(lines)
